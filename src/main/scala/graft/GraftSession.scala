@@ -71,9 +71,23 @@ object GraftSession {
       // and the median read 15.0 s; at 4096 entries JIT falls to a
       // declining 5.9 s and the median to 9.1 s (−39%). Scale-safe by
       // construction: the cache holds compiled classes (not data, not
-      // results), is per-JVM, and on a 100 TB cluster the same eviction
-      // churn costs every executor JVM CPU that should be running tasks.
+      // results), and on a 100 TB cluster the same eviction churn costs
+      // every executor JVM CPU that should be running tasks. The cache is
+      // keyed per (JVM, context classloader), not per JVM: a class compiled
+      // under one loader is a miss under another, so it is shared only by
+      // sessions whose tasks run under the same executor loader — which is
+      // what the artifact-isolation setting below provides.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // one executor classloader for every session: under session artifact
+      // isolation (the Spark 4 default) each session UUID gets its own
+      // ExecutorClassLoader, and each `IngestCompiler.runAvailable` round's
+      // StreamingQuery clones the session, so every round recompiled the
+      // task-side classes of the round before and left ~110 dead-loader
+      // entries in the cache above (ingest_drops, 4 vCPU: 440 → 20–25
+      // compiles over four rounds, cycle wall 12.0 → 9.5 s; SCALING.md).
+      // The engine adds no session artifacts (addJar/addFile/addArtifact).
+      // Spark reads this only at session creation.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       // parameterized overrides (optimization guide §2.3/§6 "measure both"):
       // scale-dependent knobs — shuffle/IO codec, advisory partition size,

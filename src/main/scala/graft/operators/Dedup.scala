@@ -564,8 +564,8 @@ object Dedup {
     * `.compact.tmp` via `rewrite`, then atomically swap it in (two renames)
     * and drop the old generation. Generic so stores with a non-flat layout
     * (e.g. the cell-PARTITIONED vector index, [[VectorIndex]]) can reuse
-    * the exact same swap/recovery protocol with their own writer. Returns
-    * (rowsBefore, rowsAfter).
+    * the exact same swap/recovery protocol with their own writer, which
+    * must keep the store's schema. Returns (rowsBefore, rowsAfter).
     */
   def rewriteStore(spark: org.apache.spark.sql.SparkSession, storeDir: String)(
       rewrite: (DataFrame, String) => Unit): (Long, Long) = {
@@ -580,7 +580,9 @@ object Dedup {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old)) fs.delete(old, true)
     rewrite(before, tmp.toString)
-    val rows1 = spark.read.parquet(tmp.toString).count()
+    // the rewrite keeps the store's schema, so read it back with `before`'s
+    // instead of inferring it (inference runs a footer-read Spark job)
+    val rows1 = spark.read.schema(before.schema).parquet(tmp.toString).count()
     // swap: two renames, then drop the old generation. A crash BETWEEN the
     // renames leaves the canonical path empty (data at .compact.old /
     // .compact.tmp) — readers must go through [[readStore]], which calls

@@ -179,6 +179,35 @@ class StreamSpecSpec extends SparkSpec {
       "archived-drop round must be a no-op, not an inference failure")
   }
 
+  test("ingest rounds reuse generated code: a second round over a same-shape drop compiles ~nothing") {
+    // every runAvailable round starts a new StreamingQuery, which clones
+    // the session; under per-session artifact isolation each clone's tasks
+    // ran under a new executor classloader, and the codegen cache (keyed
+    // per loader) missed on every task-side class — the second round
+    // re-compiled its task-side classes. GraftSession turns isolation off,
+    // so every round shares one loader and one cache (sf0.001, local[4]:
+    // second round 0–7 compiles with isolation off, 59–65 with it on).
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
+    val drop = docs.join(emb, docs("doc_id") === emb("vec_id"))
+      .select("doc_id", "text", "embedding")
+    val spec = SpecJson.ingestFromJson(SparkEntry.pretrainIngestJson)
+    def round(): Long = {
+      val root = java.nio.file.Files.createTempDirectory("codegen_reuse").toString
+      drop.write.parquet(s"$root/drop")
+      val before = METRIC_COMPILATION_TIME.getCount
+      IngestCompiler.runAvailable(spark, spec, Map("root" -> root))
+      assert(spark.read.parquet(s"$root/corpus").count() > 0)
+      METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = round()
+    val second = round()
+    info(s"Janino compiles: first round $first, second round $second")
+    assert(second <= 20,
+      s"second ingest round compiled $second classes (first: $first): generated code is not reused")
+  }
+
   test("source options pass through: maxFilesPerTrigger bounds per-round micro-batches") {
     // the 100 TB knob: a backlogged drop directory (millions of files)
     // must not become ONE giant micro-batch — the spec's source options
